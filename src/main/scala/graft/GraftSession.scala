@@ -205,8 +205,25 @@ object GraftSession {
     mine.foreach(spark.catalog.dropTempView(_))
   }
 
+  /** The engine's session, with the tuned defaults described on this
+    * object. `file://` is routed to [[graft.io.LocalFileSystem]] (`fs.file.impl`) and
+    * [[graft.io.LocalFs]] (`fs.AbstractFileSystem.file.impl`). Every
+    * micro-batch commits checkpoint, state-store and sink files, and
+    * without the Hadoop native library the stock classes start a
+    * `chmod` process per created file or directory and a `readlink`
+    * process per link-status lookup; these classes make the same
+    * calls through `java.nio`. Symlinks and modes with
+    * setuid/setgid/sticky bits still go to Hadoop's own code, and the
+    * `.crc` files and checkpoint layout are the stock ones. The keys
+    * are set on the builder and again on the Hadoop conf of the
+    * SparkContext, because builder options do not reach a context that
+    * already exists. Hadoop's `FileSystem` cache is JVM-wide and not
+    * keyed by conf, so a `file://` `FileSystem` cached before this
+    * call stays the stock class; `FileContext`s (the checkpoint and
+    * state-store path) are resolved per use and always follow the conf.
+    */
   def getOrCreate(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession = {
-    val spark = SparkSession
+    val builder = SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -217,7 +234,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+    val spark = graft.io.LocalFs.Impls
+      .foldLeft(builder) { case (b, (k, v)) => b.config(s"spark.hadoop.$k", v) }
       .getOrCreate()
+    graft.io.LocalFs.Impls.foreach { case (k, v) => spark.sparkContext.hadoopConfiguration.set(k, v) }
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -3,8 +3,8 @@ package graft
 /** r22: what exactly does a `spark.read.parquet(path)` construction
   * cost on the driver, and how much of it does a known schema remove?
   *
-  * The R22GapProbe measured every `Tables.apply` construction at
-  * ~55–70 ms — paid inside the timed region by nearly every catalog
+  * A `Tables.apply` construction was measured at ~55–70 ms — paid
+  * inside the timed region by nearly every catalog
   * query, twice (min-of-two). Candidate fixes, cheapest first:
   *
   *  A. status quo: `spark.read.parquet(path)` (listing + footer
